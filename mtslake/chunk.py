@@ -7,7 +7,7 @@ Spark shape (SURVEY §3.1): the reference's thread-pool chunk loop
            → mapInArrow(streaming group encoder) → chunks table
 
 and the read path (Reader.read_chunk, mtscomp.py:602-635) becomes a
-shuffle-free ``mapInPandas(decode)`` over pruned chunk rows — each chunk
+shuffle-free ``mapInArrow(decode)`` over pruned chunk rows — each chunk
 row is independently addressable and expands to its points without any
 repartition.
 
@@ -62,6 +62,7 @@ from pyspark.sql import types as T
 
 from . import codec
 from .config import EngineConfig, DEFAULT
+from .parallel import shuffle_width
 from .series import TS_COL
 
 SHA1_W = 20  # text_sha1 stored as fixed-width 20-byte binary stream
@@ -264,7 +265,6 @@ def _encode_groups(
     comp_level: int,
     do_time_diff: bool,
     channels: tuple[ChannelSpec, ...],
-    emit_key,
 ):
     """Shared per-group encode loop: 1 + len(channels) codec calls per
     group on contiguous numpy slices, raw/comp byte accounting, and the
@@ -284,14 +284,13 @@ def _encode_groups(
     warnings.simplefilter("ignore", RuntimeWarning)
     try:
         _encode_groups_inner(out, data, ts_all, starts, ends, comp_level,
-                             ts_codec, ch_plan, emit_key)
+                             ts_codec, ch_plan)
     finally:
         ctx.__exit__(None, None, None)
 
 
 def _encode_groups_inner(
     out, data, ts_all, starts, ends, comp_level, ts_codec, ch_plan,
-    emit_key,
 ):
     for s, e in zip(starts, ends):
         ts = ts_all[s:e]
@@ -343,7 +342,6 @@ def _encode_groups_inner(
                 else:
                     out[f"{c.name}_min"].append(int(flat.min()))
                     out[f"{c.name}_max"].append(int(flat.max()))
-        emit_key(out, int(s))
         out["ts_min"].append(int(ts[0]))
         out["ts_max"].append(int(ts[-1]))
         out["n_points"].append(int(e - s))
@@ -353,66 +351,6 @@ def _encode_groups_inner(
         out["comp_signal_nbytes"].append(comp_sig)
         out["sha1"].append(codec.chunk_sha1(ts, sha_src))
         out["p_ts"].append(p_ts)
-
-
-def _pdf_channel_data(
-    pdf: pd.DataFrame, channels: tuple[ChannelSpec, ...], n: int
-) -> dict[str, np.ndarray]:
-    data: dict[str, np.ndarray] = {}
-    for c in channels:
-        if c.is_binary and c.hex:
-            data[c.name] = np.frombuffer(
-                bytes.fromhex("".join(pdf[c.name])), dtype=np.uint8
-            ).reshape(n, c.width)
-        elif c.is_binary:
-            buf = b"".join(bytes(v) for v in pdf[c.name])
-            if len(buf) != n * c.width:
-                raise ValueError(
-                    f"binary channel {c.name} is not fixed-width "
-                    f"{c.width} (got {len(buf)} bytes for {n} rows)"
-                )
-            data[c.name] = np.frombuffer(buf, dtype=np.uint8).reshape(
-                n, c.width
-            )
-        else:
-            data[c.name] = pdf[c.name].to_numpy(np.dtype(c.dtype))
-    return data
-
-
-def _encode_block(
-    pdf: pd.DataFrame,
-    max_points: int | None = None,
-    comp_level: int = 1,
-    do_time_diff: bool = True,
-    channels: tuple[ChannelSpec, ...] = DEFAULT_CHANNELS,
-) -> pd.DataFrame:
-    """Encode every (url, chunk_id) group in a sorted block; one output
-    row per group. Vectorized group detection; per-group work is
-    1 + n_channels codec calls on contiguous numpy slices. (pandas
-    twin of the Arrow kernel — used by the streaming sealer, which
-    receives pandas frames from applyInPandasWithState.)"""
-    n = len(pdf)
-    urls = pdf["url"].to_numpy()
-    cids = pdf["chunk_id"].to_numpy(np.int64)
-    langs = pdf["lang"].to_numpy()
-    ts_all = pdf[TS_COL].to_numpy(np.int64)
-    data = _pdf_channel_data(pdf, channels, n)
-
-    change = np.flatnonzero((urls[1:] != urls[:-1]) | (cids[1:] != cids[:-1])) + 1
-    starts = np.concatenate(([0], change))
-    ends = np.concatenate((change, [n]))
-    starts, ends = _segment_runs(starts, ends, max_points)
-
-    out: dict[str, list] = {c: [] for c in _out_cols(channels)}
-
-    def emit_key(o, s):
-        o["url"].append(urls[s])
-        o["chunk_id"].append(cids[s])
-        o["lang"].append(langs[s])
-
-    _encode_groups(out, data, ts_all, starts, ends, comp_level,
-                   do_time_diff, channels, emit_key)
-    return pd.DataFrame(out)
 
 
 def _binary_flat(arr: pa.Array, n: int) -> np.ndarray:
@@ -444,10 +382,12 @@ def _encode_block_arrow(
     do_time_diff: bool = True,
     channels: tuple[ChannelSpec, ...] = DEFAULT_CHANNELS,
 ) -> pa.RecordBatch:
-    """Arrow-native twin of _encode_block: url/lang stay in Arrow
-    buffers (one .as_py() per GROUP, never per row), binary-channel
-    bytes are a zero-copy view. Same codec calls → bit-identical
-    payloads.
+    """Encode every (url, chunk_id) group in a sorted block; one output
+    row per group. The one encode kernel: the batch encoder and the
+    streaming sealer both call it, so a sealed streaming chunk is
+    bit-identical to the batch one. url/lang stay in Arrow buffers (one
+    key per GROUP, never per row), binary-channel bytes are a zero-copy
+    view.
 
     chunk ids are DERIVED in-kernel (ts // chunk_dur) instead of being
     shipped as a column: the encode phase is Arrow-IPC-bandwidth-bound
@@ -486,11 +426,8 @@ def _encode_block_arrow(
     out["lang"] = lang.take(start_idx).to_pylist()
     out["chunk_id"] = cids[np.asarray(starts)].tolist()
 
-    def emit_key(o, s):  # keys precomputed above
-        pass
-
     _encode_groups(out, data, ts_all, starts, ends, comp_level,
-                   do_time_diff, channels, emit_key)
+                   do_time_diff, channels)
     return pa.RecordBatch.from_pydict(out, schema=_pa_chunk_schema(channels))
 
 
@@ -600,12 +537,9 @@ def compress_series(
         # (what a cluster tunes shuffle.partitions for) and forbids
         # the collapse; tiny inputs pay a few ms of empty-task
         # overhead instead of a serial encode.
-        sess = series.sparkSession
-        try:
-            n_part = int(sess.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            n_part = sess.sparkContext.defaultParallelism
-        keyed = keyed.repartition(n_part, "url", "chunk_id")
+        keyed = keyed.repartition(
+            shuffle_width(series.sparkSession), "url", "chunk_id"
+        )
     from functools import partial
 
     encode = partial(

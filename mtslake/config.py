@@ -50,7 +50,6 @@ class EngineConfig:
     # hot-chunk guard: encoder splits any (url, chunk_id) run longer than
     # this into bounded segment rows (chunk._segment_runs)
     hot_chunk_points: int = 250_000
-    shuffle_partitions: int = 32
 
     def with_overrides(self, **kwargs) -> "EngineConfig":
         """kwargs-over-defaults merge (≙ read_config + kwargs merge,

@@ -26,24 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from .ckpt import eager_checkpoint, release as release_ckpt
-
-
-def _spread(docs: DataFrame, *cols) -> DataFrame:
-    """Narrow projection of ``docs``, round-robin-spread ONLY when the
-    scan yields fewer splits than cores.
-
-    The hash/shingle stages are CPU-bound, so a single input split must
-    not serialize them — but a web-scale table already has ≫ cores
-    input splits, and an unconditional ``repartition`` there would be a
-    full-corpus shuffle with the text payload riding it (the reference's
-    analogue, the batched parallel map mtscomp.py:399-423, never
-    re-shuffles its input either). Projecting FIRST keeps any needed
-    spread to exactly the consumed columns."""
-    narrow = docs.select(*cols)
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if narrow.rdd.getNumPartitions() < par:
-        narrow = narrow.repartition(par)
-    return narrow
+from .parallel import spread
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text",
@@ -125,7 +108,7 @@ def band_signatures(
     Jaccard verify joins them back to a fresh shingle projection
     (two narrow hash joins instead of a wide banded shuffle)."""
     rows_per_band = n_hashes // bands
-    base = _spread(docs, F.col(id_col).alias("_id"), text_col).select(
+    base = spread(docs.select(F.col(id_col).alias("_id"), text_col)).select(
         "_id", shingles(text_col, shingle_k).alias("_sh")
     ).withColumn("_sig", minhash_signature(F.col("_sh"), n_hashes))
     return base.select(
@@ -212,13 +195,13 @@ def exact_jaccard_verify(
     the shingle base (recomputed projection — cheaper than caching the
     full shingle table, and Catalyst prunes the scan to (_id, text)).
     ``docs`` must contain every id appearing in the pairs."""
-    # _spread, like the banding side: the shingle recompute is the
+    # spread, like the banding side: the shingle recompute is the
     # CPU-heavy stage of the verify, and a single-file corpus scan
     # would otherwise compute every doc's shingles in ONE task
     # (measured: the whole verify serialized behind a 3 s single-core
     # shingle pass at sf0.1)
-    sh = _spread(
-        docs, F.col(id_col).alias("_id"), text_col
+    sh = spread(
+        docs.select(F.col(id_col).alias("_id"), text_col)
     ).select("_id", shingles(text_col, shingle_k).alias("_sh"))
     cand = (
         cand_ids
@@ -446,7 +429,7 @@ def simhash64(docs: DataFrame, text_col: str = "text",
     """64-bit SimHash: per-token xxhash64, bit-majority vote weighted by
     term frequency — one explode + one groupBy, all JVM-side."""
     tok = (
-        _spread(docs, F.col(id_col).alias("_id"), text_col)
+        spread(docs.select(F.col(id_col).alias("_id"), text_col))
         .select("_id", F.explode(_tokens(text_col)).alias("_t"))
         .filter(F.col("_t") != "")
         .groupBy("_id", "_t")
@@ -535,23 +518,19 @@ def embedding_near_dupes(
     """
     from mtslake.simsearch import cosine, hyperplane_signature
 
-    # spread the probe side: both branches run a per-row/per-pair
-    # expensive interpreted stage (signature eval, or the all-pairs
-    # cosine verify streamed against a broadcast) whose parallelism is
-    # otherwise the scan's split count — a small parquet yields a
-    # handful of splits and one straggler task does the quadratic work
-    # while the cluster idles (measured: 16k vecs, 4 tasks, 25+ min vs
-    # ~2 min spread). Conditional via _spread, so a web-scale table
-    # with ≫ cores splits never pays a shuffle.
-    base = _spread(
-        embeddings.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        ),
-        "_id", "_v",
+    # both branches run a per-row/per-pair expensive interpreted stage
+    # (signature eval, or the all-pairs cosine verify streamed against
+    # a broadcast) whose parallelism is otherwise the scan's split
+    # count — a small parquet yields a handful of splits and one
+    # straggler task does the quadratic work while the cluster idles
+    # (measured: 16k vecs, 4 tasks, 25+ min vs ~2 min spread)
+    base = embeddings.select(
+        F.col(id_col).alias("_id"),
+        F.col(vec_col).cast("array<double>").alias("_v"),
     )
     if n_planes > 0:
-        base = base.withColumn(
+        # both join sides evaluate the signature per row: spread once
+        base = spread(base).withColumn(
             "_sig", hyperplane_signature(F.col("_v"), n_planes, dim)
         )
         a = base.select(
@@ -577,7 +556,9 @@ def embedding_near_dupes(
             .dropDuplicates(["id_a", "id_b"])
         )
     else:
-        a, b = base.alias("a"), base.alias("b")
+        # only the stream side's width matters: the build side is
+        # collected to the driver and broadcast
+        a, b = spread(base).alias("a"), base.alias("b")
         cand = a.join(b, F.col("a._id") < F.col("b._id")).select(
             F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"),
             F.col("a._v").alias("_va"), F.col("b._v").alias("_vb"),

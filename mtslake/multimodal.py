@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from .parallel import spread
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -57,25 +59,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("features", T.ArrayType(T.DoubleType()), False),
     ]
 )
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Pin the exchange feeding a per-row-expensive Python kernel to
-    the session's shuffle width. Media/doc rows are byte-small next to
-    their kernel cost (a JPEG entropy decode is orders of magnitude
-    above the row's scan bytes), so AQE's size-based coalescing — or
-    the split math of a tiny source parquet — otherwise runs the
-    kernel on a handful of tasks while the rest of the cluster idles:
-    the same collapse class fixed for the codec encode (chunk.py) and
-    the binary interop scans (sources.py). An explicit-N repartition
-    is exempt from AQE coalescing; every kernel here is per-row
-    deterministic, so outputs are partitioning-invariant."""
-    sess = df.sparkSession
-    try:
-        n = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n = sess.sparkContext.defaultParallelism
-    return df.repartition(n)
-
 
 _STUBBED = True  # audio/video decode needs libs absent from this container
 
@@ -334,7 +317,7 @@ def extract_features(media: DataFrame, n_features: int = 8) -> DataFrame:
                 }
             )
 
-    return _spread(media).mapInPandas(gen, schema=FEATURE_SCHEMA)
+    return spread(media).mapInPandas(gen, schema=FEATURE_SCHEMA)
 
 
 def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
@@ -385,7 +368,7 @@ def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
                 }
             )
 
-    return _spread(media).mapInPandas(gen, schema=out_schema)
+    return spread(media).mapInPandas(gen, schema=out_schema)
 
 
 def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
@@ -425,7 +408,7 @@ def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
                 }
             )
 
-    return _spread(media).mapInPandas(gen, schema=schema)
+    return spread(media).mapInPandas(gen, schema=schema)
 
 
 def synthesize_media(docs: DataFrame, kind: str = "image") -> DataFrame:
@@ -480,7 +463,7 @@ def synthesize_ppm_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return _spread(base).mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return spread(base).mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
 def synthesize_jpeg_media(docs: DataFrame, quality: int = 90) -> DataFrame:
@@ -523,7 +506,7 @@ def synthesize_jpeg_media(docs: DataFrame, quality: int = 90) -> DataFrame:
                 }
             )
 
-    return _spread(base).mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return spread(base).mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
 def synthesize_png_media(docs: DataFrame) -> DataFrame:
@@ -568,4 +551,4 @@ def synthesize_png_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return _spread(base).mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return spread(base).mapInPandas(gen, schema=MEDIA_SCHEMA)

@@ -2,7 +2,7 @@
 
     read_range(store, t0, t1, url?) =
         prune chunks on [ts_min, ts_max] overlap   (≙ bisect, :661-684)
-        → mapInPandas(decode)                      (≙ read_chunk, :602-635)
+        → mapInArrow(decode)                       (≙ read_chunk, :602-635)
         → filter ts BETWEEN t0 AND t1              (≙ trim, :828-833)
 
 "Concatenate then trim" becomes union-of-chunk-decodes + WHERE — and the
@@ -85,24 +85,3 @@ def read_range(
         if hi is not None:
             decoded = decoded.filter(F.col(ch) <= hi)
     return decoded.select("url", "lang", TS_COL, *requested)
-
-
-def read_step(
-    store: ChunkStore,
-    step: int,
-    t0_us: int | None = None,
-    t1_us: int | None = None,
-    url: str | None = None,
-    cfg: EngineConfig = DEFAULT,
-) -> DataFrame:
-    """Strided read (≙ slice step, mtscomp.py:828-833): every step-th
-    point per url by row position within the range."""
-    from pyspark.sql import Window as W
-
-    base = read_range(store, t0_us, t1_us, url=url, cfg=cfg)
-    w = W.partitionBy("url").orderBy(TS_COL, "text_sha1")
-    return (
-        base.withColumn("_rn", F.row_number().over(w) - 1)
-        .filter(F.pmod(F.col("_rn"), F.lit(step)) == 0)
-        .drop("_rn")
-    )

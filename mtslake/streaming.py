@@ -179,7 +179,7 @@ def streaming_compress(
 
     Per-url ``GroupState`` buffers raw points; once the event-time
     watermark passes a chunk's end boundary the chunk is *sealed* with
-    the exact batch codec (``chunk._encode_block``), so a sealed
+    the batch encode kernel (``chunk._encode_block_arrow``), so a sealed
     streaming chunk is **bit-identical** — payloads, sha1, stats — to
     what the batch path would produce for the same points (the
     streaming analogue of the reference's ordered chunk writer,
@@ -222,7 +222,9 @@ def streaming_compress(
     unordered table; only the segment-boundary alignment with batch is
     best-effort above the bound).
     """
+    import numpy as np
     import pandas as pd
+    import pyarrow as pa
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from . import chunk as chunk_mod
@@ -315,14 +317,31 @@ def streaming_compress(
         else:
             state.remove()
         if len(closed):
-            blk = closed.copy()
-            blk["url"] = url
-            yield chunk_mod._encode_block(
-                blk[["url", "chunk_id", "lang", TS_COL,
-                     "n_chars", "value", "text_sha1"]],
-                cfg.hot_chunk_points,
-                cfg.comp_level,
+            # seal through the batch kernel itself, in Arrow; digests
+            # cross unhexed, as compress_series ships them
+            n = len(closed)
+            blk = {"url": pa.array([url] * n, pa.string()),
+                   "lang": pa.array(closed["lang"], pa.string()),
+                   TS_COL: pa.array(closed[TS_COL].to_numpy(np.int64))}
+            for c in chunk_mod.DEFAULT_CHANNELS:
+                if c.is_binary:
+                    blk[c.name] = chunk_mod._fixed_width_array(
+                        bytes.fromhex("".join(closed[c.name])), n,
+                        c.width, hex=False,
+                    )
+                else:
+                    blk[c.name] = pa.array(
+                        closed[c.name].to_numpy(np.dtype(c.dtype))
+                    )
+            rb = chunk_mod._encode_block_arrow(
+                pa.table(blk), dur, cfg.hot_chunk_points, cfg.comp_level,
                 cfg.do_time_diff,
+            )
+            # nullable Float64 keeps a NaN stat a NaN: PySpark masks
+            # isnull() on output, which would write a numpy NaN as NULL
+            # and make value-range pruning drop the chunk
+            yield rb.to_pandas(
+                types_mapper={pa.float64(): pd.Float64Dtype()}.get
             )
 
     return with_ts.groupBy("url").applyInPandasWithState(
@@ -613,7 +632,9 @@ def streaming_uptime(
     new island with or without them). An event-time timeout armed at
     the earliest open bucket end flushes urls that stop pinging.
     """
+    import numpy as np
     import pandas as pd
+    import pyarrow as pa
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     us = int(TIER_US[tier])

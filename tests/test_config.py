@@ -17,7 +17,7 @@ def test_override_non_none_wins():
 
 
 def test_override_none_ignored():
-    c = DEFAULT.with_overrides(chunk_duration_us=None, shuffle_partitions=None)
+    c = DEFAULT.with_overrides(chunk_duration_us=None, comp_level=None)
     assert c == DEFAULT
 
 
@@ -58,6 +58,10 @@ def test_persisted_unknown_key_rejected(tmp_path, monkeypatch):
     monkeypatch.setenv("MTSLAKE_CONFIG", str(tmp_path / "site.json"))
     with pytest.raises(KeyError):
         C.write_persisted(not_a_knob=1)
+    # shuffle width is a Spark session setting, not an engine knob
+    assert not hasattr(EngineConfig(), "shuffle_partitions")
+    with pytest.raises(KeyError):
+        C.write_persisted(shuffle_partitions=64)
 
 
 def test_set_default_cli_flag(tmp_path, monkeypatch):

@@ -510,31 +510,108 @@ def test_acf_join_is_co_partitioned_and_partial_aggregated(spark):
     assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_multimodal_kernels_spread_to_shuffle_width(spark):
-    """Every multimodal Python kernel must sit above an explicit-N
-    round-robin exchange (exempt from AQE coalescing): media rows are
-    byte-small next to their kernel cost, so a tiny source's split
-    math — or AQE's byte-based coalescing below a join — would
-    otherwise run the kernel on a handful of tasks (measured 8x-sweep
-    regression class, round 6 §11)."""
-    from mtslake.multimodal import extract_features, synthesize_media
+def _nodes(plan, cls: str):
+    """Every node of class ``cls`` in a physical plan (AQE unwrapped)."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _nodes(plan.executedPlan(), cls)
+        return
+    if name == cls:
+        yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _nodes(children.apply(i), cls)
 
-    docs = spark.createDataFrame(
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _docs(spark):
+    # 20 rows of createDataFrame are 8 splits under local[8]: wide
+    return spark.createDataFrame(
         [(i, f"text {i}", 10) for i in range(20)],
         "doc_id long, text string, n_chars long",
     )
-    feats = extract_features(synthesize_media(docs))
-    plan = feats._jdf.queryExecution().executedPlan().toString()
+
+
+def test_multimodal_kernels_spread_to_shuffle_width(spark):
+    """Every multimodal Python kernel fed by a narrow input must sit
+    above an explicit-N round-robin exchange (exempt from AQE
+    coalescing): media rows are byte-small next to their kernel cost,
+    so a tiny source's split math would otherwise run the kernel on a
+    handful of tasks (measured 8x-sweep regression class, round 6 §11).
+    A composed pipeline spreads once, not once per kernel."""
+    from mtslake.multimodal import (
+        extract_features, resize_images, synthesize_media,
+    )
+
+    docs = _docs(spark).coalesce(1)  # the one-split scan §11 measured
+    plan = _plan(extract_features(synthesize_media(docs)))
     assert "REPARTITION_BY_NUM" in plan, plan
-    assert "RoundRobinPartitioning" in plan, plan
+    assert plan.count("RoundRobinPartitioning") == 1, plan
+    composed = extract_features(resize_images(synthesize_media(docs), 8, 8))
+    assert _plan(composed).count("RoundRobinPartitioning") == 1, \
+        _plan(composed)
+
+
+def test_multimodal_kernel_on_join_output_spreads(spark):
+    """A join's output width is whatever AQE coalesces it to, so a
+    kernel fed by a join is spread even when both inputs are wide."""
+    from mtslake.multimodal import extract_features, synthesize_media
+
+    docs = _docs(spark)
+    joined = docs.join(docs.select("doc_id"), "doc_id")
+    plan = _plan(extract_features(synthesize_media(joined)))
+    assert plan.count("RoundRobinPartitioning") == 1, plan
+
+
+def test_multimodal_kernel_on_wide_input_adds_no_shuffle(spark):
+    """An input with >= defaultParallelism splits is already spread: no
+    round-robin exchange of the payload."""
+    from mtslake.multimodal import extract_features, synthesize_media
+
+    docs = _docs(spark)
+    assert docs.rdd.getNumPartitions() >= \
+        spark.sparkContext.defaultParallelism, "fixture: need a wide input"
+    plan = _plan(extract_features(synthesize_media(docs)))
+    assert "RoundRobinPartitioning" not in plan, plan
+
+
+def test_spread_decides_without_running_a_job(spark):
+    """spread reads the physical plan; counting partitions with
+    df.rdd.getNumPartitions() would run every AQE stage below an
+    exchange-bearing input (one job each for a repartition, a groupBy
+    and a join) and see AQE's coalesced count."""
+    from mtslake.parallel import shuffle_width, spread
+
+    docs = _docs(spark)
+    tracker = spark.sparkContext.statusTracker()
+    inputs = [
+        docs,
+        docs.repartition(3),
+        docs.repartition(16),
+        docs.groupBy("n_chars").count(),
+        docs.join(docs.select("doc_id"), "doc_id"),
+        docs.groupBy("n_chars").count().cache(),
+    ]
+    before = set(tracker.getJobIdsForGroup())
+    out = [spread(df) for df in inputs]
+    assert set(tracker.getJobIdsForGroup()) == before
+    inputs[-1].unpersist()
+    # wide, left as is: 8 splits, and an explicit-N repartition at
+    # >= defaultParallelism
+    spread_to = f"RoundRobinPartitioning({shuffle_width(spark)})"
+    assert [spread_to in _plan(o) for o in out] == \
+        [False, True, False, True, True, True]
 
 
 def test_embedding_near_dup_all_pairs_spreads_stream_side(spark):
     """The all-pairs variant's inequality join nest-loops with the
     STREAM side's parallelism = the scan's split count; a one-split
     input must be spread so the quadratic cosine verify does not
-    serialize on one task (round 6 §12). The conditional _spread only
-    fires when splits < cores, so a wide table pays no shuffle."""
+    serialize on one task (round 6 §12). Only the stream side is
+    spread, and only when narrow, so a wide table pays no shuffle."""
     from mtslake.dedup import embedding_near_dupes
 
     emb = spark.createDataFrame(
@@ -542,10 +619,15 @@ def test_embedding_near_dup_all_pairs_spreads_stream_side(spark):
         "vec_id long, embedding array<double>",
     ).coalesce(1)  # model the one-split scan that serialized the verify
     out = embedding_near_dupes(emb, threshold=0.99, dim=2)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(out)
     assert ("BroadcastNestedLoopJoin" in plan
             or "CartesianProduct" in plan), plan
-    assert "RoundRobinPartitioning" in plan, plan
+    assert plan.count("RoundRobinPartitioning") == 1, plan
+    # the broadcast build side is collected to the driver: spreading it
+    # first would be a wasted shuffle
+    for bx in _nodes(out._jdf.queryExecution().executedPlan(),
+                     "BroadcastExchangeExec"):
+        assert "RoundRobinPartitioning" not in bx.toString(), plan
     # and with a wide input the spread must NOT add a shuffle
     wide = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(30)],

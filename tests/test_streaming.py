@@ -143,6 +143,64 @@ def test_sealer_state_bounded_by_hot_chunk_points(spark, tmp_path):
     }
 
 
+def test_sealed_chunks_keep_nan_value_stats(spark, tmp_path):
+    """The streaming mirror of test_nan_values_do_not_poison_pruning_stats
+    (test_plans.py): a sealed chunk's NaN ``value_max`` must reach the
+    store as NaN, not NULL. With NULL, ``value_max >= lower`` is NULL and
+    value pruning drops the chunk together with its finite rows."""
+    import math
+
+    from mtslake.catalog import prune_chunks_by_value
+
+    day = 86_400_000_000
+    url = "https://a.example.com/x"
+
+    def at(chunk_id, hour):  # day chunks; ts > 0 so no row is late
+        return (1 + chunk_id) * day + hour * 3_600_000_000
+
+    rows = [(url, at(0, i), 10, v, "00" * 20, "en")
+            for i, v in enumerate([1.0, float("nan"), 3.0,
+                                   float("nan"), 5.0])]
+    rows += [(url, at(1, i), 10, float("nan"), "00" * 20, "en")
+             for i in range(3)]
+    rows += [(url, at(2, i), 10, 100.0 + i, "00" * 20, "en")
+             for i in range(3)]
+    # a row in chunk 3 moves the watermark past chunks 0-2, sealing them
+    rows.append((url, at(3, 0), 10, 7.0, "00" * 20, "en"))
+    series = spark.createDataFrame(
+        rows, "url string, ts_us long, n_chars long, value double, "
+        "text_sha1 string, lang string",
+    )
+    src = str(tmp_path / "src")
+    series.coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(series.schema).parquet(src)
+    out, ck = str(tmp_path / "chunks"), str(tmp_path / "ck")
+    streaming.run_compress_stream_to_parquet(
+        stream, out, ck, DEFAULT).start().awaitTermination()
+
+    got = spark.read.parquet(out)
+    stats = {r["chunk_id"] - 1: (r["value_min"], r["value_max"])
+             for r in got.collect()}
+    assert set(stats) == {0, 1, 2}
+    assert stats[0][0] == 1.0 and math.isnan(stats[0][1])
+    assert math.isnan(stats[1][0]) and math.isnan(stats[1][1])
+    assert stats[2] == (100.0, 102.0)
+    # engine order keeps NaN for a lower bound: chunk 0's finite rows
+    # 3.0 and 5.0 and the all-NaN chunk survive the prune
+    kept = prune_chunks_by_value(got, "value", lower=2.0)
+    assert kept.count() == 3
+    decoded = chunk.decompress_chunks(kept).filter(F.col("value") >= 2.0)
+    assert {r["value"] for r in decoded.collect()
+            if not math.isnan(r["value"])} == {3.0, 5.0, 100.0, 101.0,
+                                               102.0}
+    # and the sealed rows are the batch rows, byte for byte
+    cols = [c for c in got.columns if c not in ("value_min", "value_max")]
+    batch = chunk.compress_series(series, DEFAULT).filter(
+        F.col("chunk_id") < 4)
+    assert {tuple(r) for r in got.select(cols).collect()} == \
+        {tuple(r) for r in batch.select(cols).collect()}
+
+
 def test_streaming_tier_reaggregates_into_batch_1h(spark, series_parquet,
                                                    tmp_path):
     src, series = series_parquet
